@@ -115,6 +115,12 @@ object Transform {
     * 800-row CSV) has exactly ONE row at the max ts per symbol
     * (verified), so the declared query's result is bit-identical —
     * oracle-hash + golden-diff re-proven this round.
+    *
+    * Eager work: with `computePnl` the weekly aggregate is localCheckpointed
+    * (see below), so building the returned DataFrame already runs one
+    * Spark job over the whole input — a caller timing "plan construction"
+    * is timing that job. `spark.graft.materialize.skip=true` turns the
+    * checkpoint off for explain-only passes.
     */
   def apply(cleanTrades: DataFrame, computePnl: Boolean = true): DataFrame = {
     val derived = withDerived(cleanTrades)

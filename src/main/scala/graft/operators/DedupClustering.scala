@@ -42,6 +42,7 @@ object DedupClustering {
   private val DefaultBroadcastRows = 1L << 20
   private val CollectEdgesConf = "spark.graft.cc.collectEdges"
   private val DefaultCollectEdges = 1L << 20
+  private val CheckpointDirConf = "spark.graft.checkpoint.dir"
 
   /** Driver-side union-find over the canonical (src<dst) edge list, used
     * by the small-graph fast path. Union attaches the larger root under
@@ -69,6 +70,23 @@ object DedupClustering {
     parent.keysIterator.map(k => k -> find(k)).toArray
   }
 
+  /** Non-canonical members of every duplicate cluster — THE loser set a
+    * dedup apply anti-joins away: connected components over `pairs`, each
+    * cluster keeping its minimum doc_id. Every dedup family (MinHash+LSH,
+    * simhash, winnow, embedding) supplies only its pair frame and shares
+    * this one clustering + election, so their apply semantics cannot
+    * diverge.
+    *
+    * Contract on `pairs(doc_a, doc_b)`: `doc_a < doc_b` on every row, no
+    * duplicate rows, no self-pairs — the canonical edge set, which lets
+    * CC skip its re-canonicalization shuffle (see `pairsCanonical`). Every
+    * in-repo pair family meets it by construction.
+    */
+  def losers(pairs: DataFrame): DataFrame =
+    connectedComponents(pairs, pairsCanonical = true)
+      .filter(col("doc_id") =!= col("cluster_id"))
+      .select("doc_id")
+
   /** pairs(doc_a, doc_b) → (doc_id, cluster_id) where cluster_id is the
     * minimum doc_id of the component. Only documents that appear in at
     * least one pair are returned (singletons are their own cluster by
@@ -76,14 +94,17 @@ object DedupClustering {
     *
     * Iteration state MUST be checkpointed, not cached: iterative self-joins
     * grow the logical plan exponentially — caching keeps the lineage, and
-    * analysis alone blows up after a few rounds. `checkpointDir` picks the
-    * failure semantics:
+    * analysis alone blows up after a few rounds. The session conf
+    * `spark.graft.checkpoint.dir` picks the failure semantics, read here
+    * and nowhere else, so every CC caller (registry queries, the training
+    * pipeline) honors it and a cluster operator flips semantics without
+    * code changes:
     *
-    *   - `None` (default): `localCheckpoint` — partitions pinned in
+    *   - unset (default): `localCheckpoint` — partitions pinned in
     *     executor-local storage. Fast (no FS round-trip), but a LOST
     *     EXECUTOR loses its blocks and fails the query, which must restart
     *     from scratch. Right for local mode and short interactive runs.
-    *   - `Some(dir)`: reliable `checkpoint()` to `dir` (HDFS/S3 at cluster
+    *   - set to a dir: reliable `checkpoint()` to it (HDFS/S3 at cluster
     *     scale) — state survives executor loss; Spark recomputes downstream
     *     tasks from the checkpoint instead of failing the job. Right for
     *     long iterative runs on real clusters, at the cost of one
@@ -95,11 +116,7 @@ object DedupClustering {
     *     only at GC time); on return just the final label table's files
     *     remain. NOTE: sets the session's global checkpoint dir.
     *
-    * The registered q43/q58 thread `spark.graft.checkpoint.dir` (session
-    * conf) into this parameter, so a cluster operator flips semantics
-    * without code changes.
-    */
-  /** @param pairsCanonical the caller GUARANTEES `pairs` is already the
+    * @param pairsCanonical the caller GUARANTEES `pairs` is already the
     *   canonical edge set: `doc_a < doc_b` on every row, no duplicates, no
     *   self-pairs. Every in-repo pair family satisfies this by
     *   construction — [[RelationalOps.inBucketPairs]] emits sorted-struct
@@ -114,9 +131,11 @@ object DedupClustering {
     */
   def connectedComponents(
       pairs: DataFrame, maxIters: Int = 20,
-      checkpointDir: Option[String] = None,
       pairsCanonical: Boolean = false): DataFrame = {
-    val sc = pairs.sparkSession.sparkContext
+    val spark = pairs.sparkSession
+    val conf = spark.conf
+    val checkpointDir = conf.getOption(CheckpointDirConf)
+    val sc = spark.sparkContext
     checkpointDir.foreach(sc.setCheckpointDir)
     val fs = checkpointDir.map(dir =>
       new org.apache.hadoop.fs.Path(dir).getFileSystem(sc.hadoopConfiguration))
@@ -178,8 +197,6 @@ object DedupClustering {
     // the cost center of every dedup-apply query, and "how many rounds,
     // how long each" is the first question at a new data scale. Gated on
     // session conf so production plans carry zero overhead.
-    val spark = pairs.sparkSession
-    val conf = spark.conf
     val debug = conf.getOption("spark.graft.cc.debug").contains("true")
     val broadcastRows = conf.getOption(BroadcastRowsConf)
       .map(_.toLong).getOrElse(DefaultBroadcastRows)

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.functions.TextOps
+import graft.operators.DedupClustering
 import graft.queries.{TextQueries, VectorQueries}
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
@@ -13,13 +14,15 @@ import org.apache.spark.sql.functions._
   * stats. The oracled registry entries are DEFINED in terms of this object
   * (q61 = `export` with defaults, q62 = `stats` over all scored docs), and
   * every stage is the single shared definition (`TextQueries.scoreDocs`,
-  * `TextQueries.neardupLosersOf`, `VectorQueries.codesCsvByDocId`) — so
+  * `DedupClustering.losers`, `VectorQueries.codesCsvByDocId`) — so
   * the pipeline, the registry queries, and the streaming twin cannot
   * diverge by construction.
   */
 object TrainingPipeline {
 
   sealed trait DedupMode
+  /** A mode whose losers are connected components over a pair frame. */
+  sealed trait PairDedup extends DedupMode
   /** Keep every document (still quality-filtered). */
   case object NoDedup extends DedupMode
   /** q20 semantics: one canonical doc (min doc_id) per exact normalized-
@@ -30,31 +33,28 @@ object TrainingPipeline {
   /** q43/q58/q61 semantics: connected components over MinHash+LSH candidate
     * pairs; each near-dup cluster keeps its minimum doc_id.
     */
-  case object NeardupDedup extends DedupMode
+  case object NeardupDedup extends PairDedup
   /** q64/q66 semantics: connected components over banded simhash pairs at
     * Hamming ≤ 3; each cluster keeps its minimum doc_id.
     */
-  case object SimhashDedup extends DedupMode
+  case object SimhashDedup extends PairDedup
   /** q65/q67 semantics: connected components over winnow-fingerprint
     * overlap pairs at overlap ≥ 0.5; each cluster keeps its minimum doc_id.
     */
-  case object WinnowDedup extends DedupMode
+  case object WinnowDedup extends PairDedup
   /** q90 semantics (SemDeDup-style): connected components over verified
     * embedding-cosine near-dup pairs (the q35 multiprobe-LSH candidates at
     * cosine > 0.4); each semantic cluster keeps its minimum doc_id.
     * Requires the corpus `embeddings` table (doc_id = vec_id) — the only
     * dedup family that sees paraphrases sharing no n-gram.
     */
-  case object EmbedDedup extends DedupMode
+  case object EmbedDedup extends PairDedup
 
   /** @param minQuality  keep docs with qualityScore ≥ this (NULL text drops)
-    * @param dedup       dedup mode (see the case objects)
-    * @param maxIters    CC iteration budget (neardup mode)
-    * @param checkpointDir reliable-checkpoint dir for CC (neardup mode).
-    *                    None falls back to the `spark.graft.checkpoint.dir`
-    *                    session conf (the same switch the registry queries
-    *                    honor); unset there too = executor-local
-    *                    checkpointing (see DedupClustering).
+    * @param dedup       dedup mode (see the case objects). The CC modes
+    *                    checkpoint per the `spark.graft.checkpoint.dir`
+    *                    session conf, like the registry queries (see
+    *                    DedupClustering.connectedComponents).
     * @param sampleRates per-language mixture down-sampling rates applied to
     *                    the PREDICTED language (lang_pred) after the quality
     *                    filter — deterministic salted-md5 thresholding, the
@@ -90,8 +90,6 @@ object TrainingPipeline {
   case class Config(
       minQuality: Double = 0.5,
       dedup: DedupMode = NeardupDedup,
-      maxIters: Int = 20,
-      checkpointDir: Option[String] = None,
       sampleRates: Map[String, Double] = Map.empty,
       gopherFilter: Boolean = false,
       sourcePriorities: Map[String, Int] = Map.empty,
@@ -102,6 +100,20 @@ object TrainingPipeline {
   private def losers(
       docs: DataFrame, emb: Option[DataFrame], cfg: Config): Option[DataFrame] =
     cfg.dedup match {
+      case NoDedup => None
+      case ExactDedup => Some(TextQueries.exactLosersOf(docs))
+      case NeardupDedup if cfg.sourcePriorities.nonEmpty =>
+        Some(TextQueries.priorityLosersOf(docs, cfg.sourcePriorities))
+      case mode: PairDedup => Some(DedupClustering.losers(pairs(docs, emb, mode)))
+    }
+
+  /** The canonical (doc_a < doc_b) pair frame each CC mode clusters. */
+  private def pairs(
+      docs: DataFrame, emb: Option[DataFrame], mode: PairDedup): DataFrame =
+    mode match {
+      case NeardupDedup => TextQueries.neardupPairsOf(docs)
+      case SimhashDedup => TextQueries.simhashPairsOf(docs)
+      case WinnowDedup => TextQueries.winnowPairsOf(docs)
       case EmbedDedup =>
         val e = emb.getOrElse(throw new IllegalArgumentException(
           "EmbedDedup requires the corpus `embeddings` table"))
@@ -112,28 +124,9 @@ object TrainingPipeline {
         // the ENTIRE cluster instead of keeping the clean survivor — the
         // invariant every text mode gets by operating on the filtered
         // docs. vec_id = doc_id by the embeddings-table contract.
-        val live = e.join(
-          docs.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi")
-        Some(VectorQueries.embedLosersOf(
-          live, maxIters = cfg.maxIters, checkpointDir = ccDir(docs, cfg)))
-      case NoDedup => None
-      case ExactDedup => Some(TextQueries.exactLosersOf(docs))
-      case NeardupDedup if cfg.sourcePriorities.nonEmpty =>
-        Some(TextQueries.priorityLosersOf(docs, cfg.sourcePriorities,
-          maxIters = cfg.maxIters, checkpointDir = ccDir(docs, cfg)))
-      case NeardupDedup =>
-        Some(TextQueries.neardupLosersOf(docs, cfg.maxIters, ccDir(docs, cfg)))
-      case SimhashDedup =>
-        Some(TextQueries.simhashLosersOf(
-          docs, maxIters = cfg.maxIters, checkpointDir = ccDir(docs, cfg)))
-      case WinnowDedup =>
-        Some(TextQueries.winnowLosersOf(
-          docs, maxIters = cfg.maxIters, checkpointDir = ccDir(docs, cfg)))
+        VectorQueries.embedPairsOf(e.join(
+          docs.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi"))
     }
-
-  private def ccDir(docs: DataFrame, cfg: Config): Option[String] =
-    cfg.checkpointDir.orElse(
-      docs.sparkSession.conf.getOption("spark.graft.checkpoint.dir"))
 
   /** The export frame: doc_id, n_tokens, quality, lang_pred
     * (+ codes_csv when `embeddings` is given — inner join on
@@ -337,13 +330,12 @@ object TrainingPipeline {
     * split_key, split — the q80 semantics,
     * [[graft.queries.TextQueries.splitAssignOf]]): split hashed from the
     * near-dup cluster id so no near-duplicate ever straddles the
-    * train/eval boundary. Honors the same checkpoint-dir resolution as the
-    * dedup modes. Join the result on doc_id to route an export's rows.
+    * train/eval boundary. Join the result on doc_id to route an export's
+    * rows.
     */
   def assignSplits(
       docs: DataFrame,
       trainFrac: Double = TextQueries.splitTrainFrac,
-      valFrac: Double = TextQueries.splitValFrac,
-      cfg: Config = Config()): DataFrame =
-    TextQueries.splitAssignOf(docs, trainFrac, valFrac, ccDir(docs, cfg))
+      valFrac: Double = TextQueries.splitValFrac): DataFrame =
+    TextQueries.splitAssignOf(docs, trainFrac, valFrac)
 }

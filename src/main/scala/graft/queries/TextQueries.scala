@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{TextFingerprints, TextOps}
-import graft.operators.RelationalOps
+import graft.operators.{DedupClustering, RelationalOps}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -22,13 +22,6 @@ import org.apache.spark.sql.functions._
 object TextQueries {
 
   type Q = (SparkSession, String) => DataFrame
-
-  /** Reliable-checkpoint dir for iterative operators (q43/q58), from the
-    * session conf — unset (local mode default) means executor-local
-    * checkpointing; see [[graft.operators.DedupClustering.connectedComponents]].
-    */
-  private def ccCheckpointDir(s: SparkSession): Option[String] =
-    s.conf.getOption("spark.graft.checkpoint.dir")
 
   /** Documents scan with the scale-adaptive fan-out ([[graft.operators
     * .Fan.out]]): identity whenever the scan already yields ≥ core-count
@@ -59,8 +52,8 @@ object TextQueries {
   /** Exact-dedup losers: every doc whose md5-of-normalized-text
     * fingerprint has a smaller doc_id — the same canonical election the
     * q20 registry entry aggregates (groupBy fingerprint → min doc_id;
-    * the oracle replays that form), factored like the *LosersOf siblings
-    * so [[graft.pipeline.TrainingPipeline]]'s ExactDedup mode and q20
+    * the oracle replays that form), factored so
+    * [[graft.pipeline.TrainingPipeline]]'s ExactDedup mode and q20
     * cannot diverge. One shuffle on the fingerprint; no window.
     */
   private[graft] def exactLosersOf(docs: DataFrame): DataFrame = {
@@ -74,24 +67,25 @@ object TextQueries {
       .select("doc_id")
   }
 
-  /** Non-canonical members of every near-dup cluster — THE loser set the
-    * dedup apply removes, shared by q58, the q61 export, and
-    * [[graft.pipeline.TrainingPipeline]] so their semantics (clustering,
-    * canonical tie-break, filter) can never diverge.
-    */
-  private[graft] def neardupLosersOf(
-      docs: DataFrame, maxIters: Int = 20,
-      checkpointDir: Option[String] = None): DataFrame =
-    graft.operators.DedupClustering
-      .connectedComponents(
-        candidatePairsFrom(sigsFrom(shingledDocs(docs))),
-        maxIters = maxIters, checkpointDir = checkpointDir,
-        pairsCanonical = true) // inBucketPairs emits a<b, distinct
-      .filter(col("doc_id") =!= col("cluster_id"))
-      .select("doc_id")
+  // ---- dedup pair families ----------------------------------------------
+  //
+  // Each family supplies only its canonical pair frame (doc_a < doc_b,
+  // distinct, no self-pairs); DedupClustering.losers turns any of them
+  // into the min-doc_id loser set, so the registry applies and
+  // TrainingPipeline share one clustering and one election.
 
-  private def dedupLosers(s: SparkSession, d: String): DataFrame =
-    neardupLosersOf(docsWide(s, d), checkpointDir = ccCheckpointDir(s))
+  /** MinHash+LSH near-dup candidate pairs (q22) — inBucketPairs emits
+    * a<b, distinct.
+    */
+  private[graft] def neardupPairsOf(docs: DataFrame): DataFrame =
+    candidatePairsFrom(sigsFrom(shingledDocs(docs)))
+
+  /** (doc_id, cluster_id) near-dup clusters over [[neardupPairsOf]] — q43,
+    * and the labels q76's priority election and q80's split key read.
+    */
+  private[graft] def neardupClustersOf(docs: DataFrame): DataFrame =
+    DedupClustering.connectedComponents(
+      neardupPairsOf(docs), pairsCanonical = true)
 
   /** Source priorities for q76: the first four sources stand in for a
     * curated slice (priority 0 — keep these when a cluster mixes
@@ -116,13 +110,8 @@ object TextQueries {
     */
   private[graft] def priorityLosersOf(
       docs: DataFrame, priorities: Map[String, Int],
-      defaultPriority: Int = 1000,
-      maxIters: Int = 20, checkpointDir: Option[String] = None): DataFrame = {
-    val clusters = graft.operators.DedupClustering.connectedComponents(
-      candidatePairsFrom(sigsFrom(shingledDocs(docs))),
-      maxIters = maxIters, checkpointDir = checkpointDir,
-      pairsCanonical = true) // inBucketPairs emits a<b, distinct
-    val withPrio = clusters
+      defaultPriority: Int = 1000): DataFrame = {
+    val withPrio = neardupClustersOf(docs)
       .join(docs.select(col("doc_id"), col("source")), "doc_id")
       .withColumn("__prio", priorityCol(priorities, defaultPriority))
     val canon = withPrio.groupBy("cluster_id")
@@ -133,42 +122,25 @@ object TextQueries {
       .select("doc_id")
   }
 
-  /** Simhash-family losers: the q64 banded Hamming ≤ `maxHamming` pairs
-    * fed through the same CC + min-doc_id-canonical semantics as the
-    * MinHash path — so SimHash is a full dedup METHOD (pairs → clusters →
-    * apply), not just a fingerprint. Same scale shape: one fingerprint
-    * pass, one (band, key) shuffle, capped bucket expansion, then CC whose
-    * input is the (small) pair set rather than the corpus.
+  /** Simhash-family pairs: the q64 banded Hamming ≤ 3 pairs — with the
+    * shared clustering, SimHash is a full dedup METHOD (pairs → clusters →
+    * apply), not just a fingerprint. Same scale shape as MinHash: one
+    * fingerprint pass, one (band, key) shuffle, capped bucket expansion,
+    * so CC's input is the (small) pair set rather than the corpus.
+    * inBucketPairs sorts the (doc_id, simhash) structs — doc_ids are
+    * unique within a bucket, so projected pairs stay a<b and distinct.
     */
-  private[graft] def simhashLosersOf(
-      docs: DataFrame, maxHamming: Int = 3, maxIters: Int = 20,
-      checkpointDir: Option[String] = None): DataFrame =
-    graft.operators.DedupClustering
-      .connectedComponents(
-        simhashPairsFrom(docs.select(
-          col("doc_id"), simhashCol.as("simhash")),
-          maxHamming).select("doc_a", "doc_b"),
-        maxIters = maxIters, checkpointDir = checkpointDir,
-        // inBucketPairs sorts the (doc_id, simhash) structs — doc_ids are
-        // unique within a bucket, so projected pairs stay a<b and distinct
-        pairsCanonical = true)
-      .filter(col("doc_id") =!= col("cluster_id"))
-      .select("doc_id")
+  private[graft] def simhashPairsOf(docs: DataFrame): DataFrame =
+    simhashPairsFrom(docs.select(col("doc_id"), simhashCol.as("simhash")))
+      .select("doc_a", "doc_b")
 
-  /** Winnow-family losers: q65 overlap pairs (≥ `minOverlap` over df-capped
-    * rare fingerprints) through the shared CC + apply semantics.
+  /** Winnow-family pairs: q65 overlap pairs (≥ 0.5 over df-capped rare
+    * fingerprints), grouped by (doc_a, doc_b) over strictly increasing
+    * posting-list positions — a<b, distinct.
     */
-  private[graft] def winnowLosersOf(
-      docs: DataFrame, minOverlap: Double = 0.5, maxIters: Int = 20,
-      checkpointDir: Option[String] = None): DataFrame =
-    graft.operators.DedupClustering
-      .connectedComponents(
-        winnowOverlapFrom(docs.select(col("doc_id"), winnowFpsStaged),
-          minOverlap = minOverlap).select("doc_a", "doc_b"),
-        maxIters = maxIters, checkpointDir = checkpointDir,
-        pairsCanonical = true)
-      .filter(col("doc_id") =!= col("cluster_id"))
-      .select("doc_id")
+  private[graft] def winnowPairsOf(docs: DataFrame): DataFrame =
+    winnowOverlapFrom(docs.select(col("doc_id"), winnowFpsStaged))
+      .select("doc_a", "doc_b")
 
   /** THE staged winnow-fingerprint column for the overlap family (q65 and
     * the q67 apply): the kernel wrapped in the projection-level barrier so
@@ -816,14 +788,10 @@ object TextQueries {
     */
   private[graft] def splitAssignOf(
       docs: DataFrame,
-      trainFrac: Double = splitTrainFrac, valFrac: Double = splitValFrac,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val clusters = graft.operators.DedupClustering.connectedComponents(
-      candidatePairsFrom(sigsFrom(shingledDocs(docs))),
-      checkpointDir = checkpointDir,
-      pairsCanonical = true) // inBucketPairs emits a<b, distinct
+      trainFrac: Double = splitTrainFrac,
+      valFrac: Double = splitValFrac): DataFrame =
     docs.select(col("doc_id"))
-      .join(clusters, Seq("doc_id"), "left")
+      .join(neardupClustersOf(docs), Seq("doc_id"), "left")
       .withColumn("group_id", coalesce(col("cluster_id"), col("doc_id")))
       .withColumn("split_key",
         substring(md5(concat(col("group_id").cast("string"), lit(":split"))), 1, 8))
@@ -832,7 +800,6 @@ object TextQueries {
           .when(col("split_key") < lit(sampleThresholdHex(trainFrac + valFrac)), "val")
           .otherwise("test"))
       .select(col("doc_id"), col("group_id"), col("split_key"), col("split"))
-  }
 
   /** The q70 Gopher repetition signals + verdict (see the registry
     * comment). Factored like its q71/q74 siblings so specs and the
@@ -1198,9 +1165,6 @@ object TextQueries {
         max(col("sz")).as("max_bucket"),
         sum(col("sz") * (col("sz") - 1) / 2).cast("long").as("pair_cost"),
         count(when(col("sz") > defaultMaxBucket, 1)).as("buckets_over_cap"))
-
-  private def candidatePairs(s: SparkSession, d: String): DataFrame =
-    candidatePairsFrom(sigs(s, d))
 
   /** SimHash near-dup pairs via 16-bit banding over the 64-bit fingerprint.
     * Pigeonhole guarantee: a pair within Hamming distance `maxHamming` ≤ 3
@@ -1662,7 +1626,7 @@ object TextQueries {
     "q21_minhash_sig" -> ((s, d) => sigs(s, d)),
 
     // LSH candidate near-dup pairs.
-    "q22_neardup_pairs" -> ((s, d) => candidatePairs(s, d)),
+    "q22_neardup_pairs" -> ((s, d) => neardupPairsOf(docsWide(s, d))),
 
     // Exact word-3-gram Jaccard over the LSH candidates (verification step).
     // array_intersect is hash-based (O(|a|+|b|) per pair, not O(|a|·|b|)).
@@ -1769,10 +1733,7 @@ object TextQueries {
     // canonical document to keep). Min-label propagation to fixpoint.
     // `spark.graft.checkpoint.dir` (session conf) switches the iteration
     // state from executor-local to reliable checkpointing for cluster runs.
-    "q43_dedup_clusters" -> ((s, d) =>
-      graft.operators.DedupClustering.connectedComponents(
-        candidatePairs(s, d), checkpointDir = ccCheckpointDir(s),
-        pairsCanonical = true)), // inBucketPairs emits a<b, distinct
+    "q43_dedup_clusters" -> ((s, d) => neardupClustersOf(docsWide(s, d))),
 
     // MinHash Jaccard ESTIMATE for the candidate pairs: the fraction of
     // agreeing signatures (each an independent min-hash, so agreement
@@ -1811,7 +1772,8 @@ object TextQueries {
       docsWide(s, d)
         .select(col("doc_id"),
           TextOps.tokenCount(col("text")).cast("long").as("n_tokens"))
-        .join(dedupLosers(s, d), Seq("doc_id"), "left_anti")
+        .join(DedupClustering.losers(neardupPairsOf(docsWide(s, d))),
+          Seq("doc_id"), "left_anti")
     }),
 
     // The q58 apply under SOURCE-PRIORITY canonical election: same
@@ -1825,8 +1787,8 @@ object TextQueries {
       docs
         .select(col("doc_id"), col("source"),
           TextOps.tokenCount(col("text")).cast("long").as("n_tokens"))
-        .join(priorityLosersOf(docs, sourcePriorities,
-          checkpointDir = ccCheckpointDir(s)), Seq("doc_id"), "left_anti")
+        .join(priorityLosersOf(docs, sourcePriorities),
+          Seq("doc_id"), "left_anti")
     }),
 
     // The q58 apply under the simhash pair family (q64 → CC → anti-join):
@@ -1839,7 +1801,7 @@ object TextQueries {
       docs
         .select(col("doc_id"),
           TextOps.tokenCount(col("text")).cast("long").as("n_tokens"))
-        .join(simhashLosersOf(docs, checkpointDir = ccCheckpointDir(s)),
+        .join(DedupClustering.losers(simhashPairsOf(docs)),
           Seq("doc_id"), "left_anti")
     }),
 
@@ -1851,7 +1813,7 @@ object TextQueries {
       docs
         .select(col("doc_id"),
           TextOps.tokenCount(col("text")).cast("long").as("n_tokens"))
-        .join(winnowLosersOf(docs, checkpointDir = ccCheckpointDir(s)),
+        .join(DedupClustering.losers(winnowPairsOf(docs)),
           Seq("doc_id"), "left_anti")
     }),
 
@@ -1956,9 +1918,7 @@ object TextQueries {
     // near-copies always share a split (hashing doc_id would leak dups
     // across the train/eval boundary). Same CC clusters as q43; the oracle
     // replays them with the shared recursive CTE.
-    "q80_split_assign" -> ((s, d) =>
-      splitAssignOf(docsWide(s, d),
-        checkpointDir = ccCheckpointDir(s))),
+    "q80_split_assign" -> ((s, d) => splitAssignOf(docsWide(s, d))),
 
     // Unigram-LM quality proxy (the CCNet/RedPajama perplexity-filter
     // shape with exact integer statistics): per doc, summed corpus
@@ -2139,8 +2099,7 @@ object TextQueries {
     // scoring/join stages add one corpus scan and one shuffle on top.
     "q61_training_export" -> ((s, d) =>
       graft.pipeline.TrainingPipeline.export(
-        docsWide(s, d), Some(Tables.embeddings(s, d)),
-        graft.pipeline.TrainingPipeline.Config(checkpointDir = ccCheckpointDir(s)))),
+        docsWide(s, d), Some(Tables.embeddings(s, d)))),
 
     // Corpus composition report: per (predicted language, 50-token length
     // band), document count and token totals — the monitoring histogram a

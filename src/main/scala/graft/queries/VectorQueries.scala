@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.VectorOps
-import graft.operators.{IvfIndex, PqIndex, RelationalOps}
+import graft.operators.{DedupClustering, IvfIndex, PqIndex, RelationalOps}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -154,7 +154,7 @@ object VectorQueries {
 
   /** The q35 pair stage as a reusable frame: multiprobe sign-LSH candidate
     * pairs (never an all-pairs scan) verified by exact fused cosine >
-    * `minCosine`. Shared by the q35 registry entry and [[embedLosersOf]]
+    * `minCosine`. Shared by the q35 registry entry and [[embedPairsOf]]
     * so the pair semantics cannot diverge between the report and the
     * dedup apply.
     */
@@ -167,27 +167,18 @@ object VectorQueries {
         VectorOps.cosine(col("ea"), col("eb")).as("cosine"))
       .filter(col("cosine") > minCosine)
 
-  /** Semantic-dedup losers: connected components over the q35 verified
-    * embedding near-dup pairs, min-id canonical per cluster — the same
-    * CC + election semantics as every text dedup family
-    * ([[graft.queries.TextQueries.neardupLosersOf]] etc.), so SemDeDup-
-    * style embedding dedup composes into the identical apply shape. At
-    * scale the CC input is the (small) verified pair set, never the
-    * corpus; the pair stage itself is the near-linear bucketed multiprobe.
+  /** Semantic-dedup pairs: the q35 verified embedding near-dup pairs as
+    * (doc_a, doc_b), the pair frame every text dedup family supplies too —
+    * so SemDeDup-style embedding dedup composes into the identical
+    * [[graft.operators.DedupClustering.losers]] apply shape. At scale the
+    * CC input is the (small) verified pair set, never the corpus; the pair
+    * stage itself is the near-linear bucketed multiprobe.
+    * lshCandidatePairs filters vec_id < probe_id then distinct; the 1:1
+    * verify joins keep the pair set a<b and duplicate-free.
     */
-  private[graft] def embedLosersOf(
-      emb: DataFrame, minCosine: Double = 0.4, maxIters: Int = 20,
-      checkpointDir: Option[String] = None): DataFrame =
-    graft.operators.DedupClustering
-      .connectedComponents(
-        embedNeardupPairs(emb, minCosine)
-          .select(col("id_a").as("doc_a"), col("id_b").as("doc_b")),
-        maxIters = maxIters, checkpointDir = checkpointDir,
-        // lshCandidatePairs filters vec_id < probe_id then distinct; the
-        // 1:1 verify joins keep the pair set a<b and duplicate-free
-        pairsCanonical = true)
-      .filter(col("doc_id") =!= col("cluster_id"))
-      .select("doc_id")
+  private[graft] def embedPairsOf(emb: DataFrame): DataFrame =
+    embedNeardupPairs(emb)
+      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
 
   /** q85: EMBEDDING-SPACE decontamination — refuse train-slice vectors
     * whose embedding is near (cosine > `threshold`) ANY eval-slice vector.
@@ -400,8 +391,7 @@ object VectorQueries {
       // commute row for row
       emb.select(col("vec_id"), col("label").cast("int").as("label"))
         .join(
-          embedLosersOf(emb,
-            checkpointDir = s.conf.getOption("spark.graft.checkpoint.dir"))
+          DedupClustering.losers(embedPairsOf(emb))
             .withColumnRenamed("doc_id", "vec_id"),
           Seq("vec_id"), "left_anti")
     }),

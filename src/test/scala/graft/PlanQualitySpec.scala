@@ -183,12 +183,7 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("q88: candidate marking is a broadcast join; recount folds to ≤k+1 buckets") {
-    // the recount table materializes at construction (it feeds both the
-    // total and the filter), so assert on the FULL lineage plan — skip
-    // the localCheckpoint like PlanDump does
-    spark.conf.set("spark.graft.materialize.skip", "true")
-    val p = try plan("q88_heavy_hitters", "simple")
-    finally spark.conf.unset("spark.graft.materialize.skip")
+    val p = plan("q88_heavy_hitters", "simple")
     // the token stream is broadcast-marked against the sketch candidates
     // and aggregated by the MARKED key (non-candidates fold into one NULL
     // bucket, which also yields n_total in the same pass — round 15) — the

@@ -79,13 +79,23 @@ class DedupClusteringSpec extends SparkSpec {
     assert(cc === (1L to 30L).map(_ -> 1L).toMap)
   }
 
+  /** Reliable-checkpoint mode for the duration of `f`: CC reads the
+    * `spark.graft.checkpoint.dir` session conf itself.
+    */
+  private def checkpointingTo[A](dir: String)(f: => A): A = {
+    spark.conf.set("spark.graft.checkpoint.dir", dir)
+    try f finally spark.conf.unset("spark.graft.checkpoint.dir")
+  }
+
   test("reliable checkpointDir produces identical labels and writes state") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
     val cc = distributedOnly {
-      DedupClustering.connectedComponents(pairs, checkpointDir = Some(dir))
-        .as[(Long, Long)].collect().toMap
+      checkpointingTo(dir) {
+        DedupClustering.connectedComponents(pairs)
+          .as[(Long, Long)].collect().toMap
+      }
     }
     assert(cc === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
     // reliable mode wrote RDD state, and superseded iteration state was
@@ -103,8 +113,10 @@ class DedupClusteringSpec extends SparkSpec {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-cc-fast-ckpt").toString
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
-    val cc = DedupClustering.connectedComponents(pairs, checkpointDir = Some(dir))
-      .as[(Long, Long)].collect().toMap
+    val cc = checkpointingTo(dir) {
+      DedupClustering.connectedComponents(pairs)
+        .as[(Long, Long)].collect().toMap
+    }
     assert(cc === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
     val rddDirs = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
       .filter(p => p.getFileName.toString.startsWith("rdd-"))

@@ -18,6 +18,31 @@ class TrainingPipelineSpec extends SparkSpec {
     assert(viaPipeline.nonEmpty)
   }
 
+  test("neardup export checkpoints under spark.graft.checkpoint.dir, same survivors") {
+    val docs = Tables.documents(spark, sf)
+    def ids(): Set[Long] =
+      TrainingPipeline.export(docs, None,
+          TrainingPipeline.Config(dedup = TrainingPipeline.NeardupDedup))
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+    val local = ids()
+    val dir = Files.createTempDirectory("graft-pipeline-ckpt")
+    // the distributed loop keeps its final label table's checkpoint on the
+    // FS (the small-graph fast path deletes the edge checkpoint it wrote)
+    spark.conf.set("spark.graft.cc.collectEdges", "0")
+    spark.conf.set("spark.graft.checkpoint.dir", dir.toString)
+    val reliable =
+      try ids()
+      finally {
+        spark.conf.unset("spark.graft.checkpoint.dir")
+        spark.conf.unset("spark.graft.cc.collectEdges")
+      }
+    val rddDirs = Files.walk(dir)
+      .filter(p => p.getFileName.toString.startsWith("rdd-")).count()
+    assert(rddDirs > 0, s"no checkpoint state under $dir")
+    assert(reliable === local)
+    assert(local.nonEmpty)
+  }
+
   test("dedup modes: none ⊇ exact ⊇ neardup survivor sets") {
     val docs = Tables.documents(spark, sf)
     def ids(mode: TrainingPipeline.DedupMode): Set[Long] =

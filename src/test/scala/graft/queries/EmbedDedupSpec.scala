@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{SparkSpec, Tables, TestFixtures}
+import graft.operators.DedupClustering
 import graft.pipeline.TrainingPipeline
 import org.apache.spark.sql.functions._
 
@@ -15,7 +16,7 @@ class EmbedDedupSpec extends SparkSpec {
 
   test("planted copies collapse: >=95% of planted pairs lose a member") {
     val planted = TestFixtures.plantedCopies(spark, sf, noise = 0.1)
-    val losers = VectorQueries.embedLosersOf(planted)
+    val losers = DedupClustering.losers(VectorQueries.embedPairsOf(planted))
       .collect().map(_.getLong(0)).toSet
     val baseIds = Tables.embeddings(spark, sf)
       .select("vec_id").collect().map(_.getLong(0))
@@ -31,7 +32,7 @@ class EmbedDedupSpec extends SparkSpec {
 
   test("q90 output is embeddings minus losers") {
     val emb = Tables.embeddings(spark, sf)
-    val losers = VectorQueries.embedLosersOf(emb)
+    val losers = DedupClustering.losers(VectorQueries.embedPairsOf(emb))
       .collect().map(_.getLong(0)).toSet
     val kept = VectorQueries.queries("q90_embed_dedup_apply")(spark, sf)
       .collect().map(_.getLong(0)).toSet
@@ -50,7 +51,7 @@ class EmbedDedupSpec extends SparkSpec {
     val baseline = TrainingPipeline.export(docs, Some(emb),
         cfg.copy(dedup = TrainingPipeline.NoDedup))
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    val losers = VectorQueries.embedLosersOf(emb)
+    val losers = DedupClustering.losers(VectorQueries.embedPairsOf(emb))
       .collect().map(_.getLong(0)).toSet
     assert(got === baseline.diff(losers))
   }
