@@ -1,22 +1,24 @@
 package graft
 
 import graft.functions.{CosineSim, DotProduct, SimHash64, WinnowFingerprint}
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
 /** SparkSessionExtensions entry point: exposes graft's custom Catalyst
   * expressions as SQL functions, so `spark.sql("SELECT simhash64(...)")`
-  * works next to the DataFrame API. Activate per-session with
-  * `.withExtensions(new GraftExtensions)` or cluster-wide via
-  * `spark.sql.extensions=graft.GraftExtensions`.
+  * works next to the DataFrame API, and plans the [[graft.operators.Stage]]
+  * barrier. [[GraftSession.create]] installs it; elsewhere use
+  * `.withExtensions(new GraftExtensions)` or
+  * `spark.sql.extensions=graft.GraftExtensions` at session creation.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach { case (name, info, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
+    ext.injectPlannerStrategy(_ => graft.operators.StageStrategy)
+  }
 }
 
 object GraftExtensions {
@@ -69,11 +71,4 @@ object GraftExtensions {
         case _ => throw new IllegalArgumentException("media_byte_features(bytes)")
       }),
   )
-
-  /** Register the functions on an already-built session (tests, REPLs). */
-  def register(spark: SparkSession): Unit =
-    functions.foreach { case (name, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(name), info, builder)
-    }
 }

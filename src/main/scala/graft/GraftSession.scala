@@ -13,6 +13,8 @@ import org.apache.spark.sql.SparkSession
   *     on a real cluster 2-3× total cores — AQE coalesces the excess).
   *   - UTC session timezone everywhere (parity with the reference's naive
   *     timestamps and the DuckDB oracle).
+  *   - [[GraftExtensions]]: the SQL functions and the `Stage` barrier's
+  *     planner strategy.
   */
 object GraftSession {
   def create(appName: String): SparkSession = {
@@ -20,6 +22,7 @@ object GraftSession {
     SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
       .appName(appName)
+      .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -25,6 +25,13 @@ object RelationalOps {
         .contains("true")) df
     else df.localCheckpoint()
 
+  /** `df` behind a [[Stage]] barrier: filters written on the result stay
+    * above `df`'s projections instead of re-deriving their expressions.
+    * Needs a session built with `graft.GraftExtensions`.
+    */
+  def stage(df: DataFrame): DataFrame =
+    org.apache.spark.sql.graftbridge.Bridge.wrapPlan(df)(Stage(_))
+
   /** Latest row per key by event time, deterministic under ties via
     * `tieBreaker`. Planned as a single shuffle on `keys` + partition-local
     * sort (window), no join. For the 2-column case `max_by(value, ts)` is

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.functions.TextOps
-import graft.operators.DedupClustering
+import graft.operators.{DedupClustering, RelationalOps}
 import graft.queries.{TextQueries, VectorQueries}
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
@@ -195,11 +195,7 @@ object TrainingPipeline {
     // scored frame instead — same doc_id set either way
     if (cfg.dedup != NoDedup) b += ("dedup" ->
       losersOpt.fold(clean)(l => clean.join(l, Seq("doc_id"), "left_anti")))
-    // gatedFilter: quality is the heavy q19 expression AND an output
-    // column — a bare noPush filter still sinks below the scoring
-    // projection with the whole chain substituted (the round-15 q61
-    // double-eval); the staged non-deterministic gate keeps the chain
-    // evaluated exactly once, in the scoring projection (see BarrierOps).
+    // staged: the gate reads the quality column, computed once per row.
     // Round 16 (guide §2.3, project early): score and gate BEFORE the
     // dedup anti-join, not after — scoring is per-row and the anti-join
     // is an equi-join on doc_id, so gate∘antijoin ≡ antijoin∘gate row for
@@ -209,8 +205,8 @@ object TrainingPipeline {
     // the post-join stage, which AQE's small-partition coalescing had
     // legitimately shrunk to ONE task at bench scale — the whole corpus
     // scored on one core (0.7 s of the slowest key's wall).
-    val scored = graft.functions.BarrierOps.gatedFilter(
-      TextQueries.scoreDocs(clean), col("quality") >= cfg.minQuality)
+    val scored = RelationalOps.stage(TextQueries.scoreDocs(clean))
+      .filter(col("quality") >= cfg.minQuality)
     val kept = losersOpt.fold(scored)(l =>
       scored.join(l, Seq("doc_id"), "left_anti"))
     b += ("quality_gate" -> kept)

@@ -139,23 +139,15 @@ object TextQueries {
     * posting-list positions — a<b, distinct.
     */
   private[graft] def winnowPairsOf(docs: DataFrame): DataFrame =
-    winnowOverlapFrom(docs.select(col("doc_id"), winnowFpsStaged))
+    winnowOverlapFrom(docs.select(col("doc_id"), winnowFps))
       .select("doc_a", "doc_b")
 
-  /** THE staged winnow-fingerprint column for the overlap family (q65 and
-    * the q67 apply): the kernel wrapped in the projection-level barrier so
-    * the size-probe filter and the Generate-inferred isnotnull cannot be
-    * substituted below it — unbarred, the round-15 plan evaluated the
-    * winnow kernel THREE times per row (pushed size-probe, inferred
-    * explode guard, and the staging projection itself; ~34 executor core-s
-    * at sf0.1 where one evaluation is ~11). The barrier must sit on the
-    * PROJECTION field, not the filter: PushPredicateThroughNonJoin only
-    * checks the project's fields for determinism (see BarrierOps.noPush).
+  /** THE winnow-fingerprint column of the overlap family (q65 and the q67
+    * apply).
     */
-  private[graft] def winnowFpsStaged: Column =
-    graft.functions.BarrierOps.noPush(
-      TextFingerprints.winnowFingerprint(
-        TextOps.normalized(col("text")), 8, 16)).as("fps")
+  private[graft] def winnowFps: Column =
+    TextFingerprints.winnowFingerprint(
+      TextOps.normalized(col("text")), 8, 16).as("fps")
 
   /** GPT-3-style benchmark decontamination (Brown et al. 2020, Appendix C
     * — no reference analogue; a training-data-pipeline extension): a
@@ -436,21 +428,15 @@ object TextQueries {
     * fixed-width lexicographic=numeric invariant).
     */
   private[graft] def qualitySample(scored: DataFrame): DataFrame =
-    graft.functions.BarrierOps.gatedFilter(
-      scored
-        .withColumn("sample_key",
-          substring(md5(concat(col("doc_id").cast("string"), lit(":qs"))), 1, 8))
-        .withColumn("__thr",
-          format_string("%08x",
-            least(floor(col("quality") * lit(4294967296.0)).cast("long"),
-              lit(4294967295L)))),
-      // gatedFilter, not a bare noPush filter: __thr derives from the heavy
-      // q19 quality expression, which is ALSO the query's output column —
-      // the substituting push-through-Project re-derived the whole chain
-      // inside the filter (measured round 16: 36 executor core-s at sf0.1
-      // vs ~1.5 for the single scoring pass). The staged non-deterministic
-      // gate evaluates quality exactly once (see BarrierOps.gatedFilter).
-      col("sample_key") < col("__thr"))
+    // staged: __thr derives from the heavy quality column, computed once
+    RelationalOps.stage(scored
+      .withColumn("sample_key",
+        substring(md5(concat(col("doc_id").cast("string"), lit(":qs"))), 1, 8))
+      .withColumn("__thr",
+        format_string("%08x",
+          least(floor(col("quality") * lit(4294967296.0)).cast("long"),
+            lit(4294967295L)))))
+      .filter(col("sample_key") < col("__thr"))
       .drop("__thr")
 
   // ---- q86 deterministic corpus shuffle + shard assignment --------------
@@ -888,13 +874,9 @@ object TextQueries {
           (col("__pst.dup_chars").cast("double")
             / greatest(col("__pst.total_chars"), lit(1L)).cast("double")) <= 0.20))
         .reduce(_ && _)
-    withStats
-      // noPush: without the barrier, PushDownPredicates substitutes this
-      // predicate through every staged projection — 22 gram_run_stats and
-      // 51 tokenizer copies evaluated per row at the single-task scan,
-      // below the fan-out exchange (measured round 15: 2.5 s → the stats
-      // Project alone is 0.3 s fanned). See [[graft.functions.NoPushdown]].
-      .filter(graft.functions.BarrierOps.noPush(passQ70 && passQ71 && passQ74))
+    // staged: the verdict reads the stats columns, computed once per row
+    RelationalOps.stage(withStats)
+      .filter(passQ70 && passQ71 && passQ74)
       .drop((Seq("__toks", "__ls", "__ps", "__lst", "__pst") ++
         gramNs.map(n => s"__g$n")): _*)
   }
@@ -1216,12 +1198,8 @@ object TextQueries {
     */
   private[graft] def winnowOverlapFrom(
       fps: DataFrame, maxDf: Int = 16, minOverlap: Double = 0.5): DataFrame = {
-    val buckets = RelationalOps.materialize(fps
-      // plain filter on the staged attribute: callers stage `fps` behind
-      // the projection-level barrier ([[winnowFpsStaged]]), which is what
-      // actually stops PushDownPredicates / InferFiltersFromGenerate from
-      // substituting the kernel below (a noPush on the FILTER alone did
-      // not — the round-15 plans show the kernel evaluated 3× per row)
+    // staged: the size probe and explode guard read fps, computed once
+    val buckets = RelationalOps.materialize(RelationalOps.stage(fps)
       .filter(size(col("fps")) > 0)
       .select(col("doc_id"), explode(col("fps")).as("fp"))
       .groupBy("fp")
@@ -1690,8 +1668,7 @@ object TextQueries {
     // so pair generation stays linear). Integer counts + one division —
     // bit-replayed by the oracle.
     "q65_winnow_overlap" -> ((s, d) => {
-      winnowOverlapFrom(docsWide(s, d).select(
-        col("doc_id"), winnowFpsStaged))
+      winnowOverlapFrom(docsWide(s, d).select(col("doc_id"), winnowFps))
     }),
 
     // TF-IDF-style term scoring with a rational idf (tf · N / df — log-free

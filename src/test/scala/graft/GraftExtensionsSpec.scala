@@ -1,12 +1,11 @@
 package graft
 
-/** The custom Catalyst expressions are reachable from SQL once registered
-  * (extension point + post-hoc registration for existing sessions).
+/** The custom Catalyst expressions are reachable from SQL in a session
+  * built with the extensions (the test session installs them at creation).
   */
 class GraftExtensionsSpec extends SparkSpec {
 
   test("simhash64 and winnow_fingerprint callable from SQL") {
-    GraftExtensions.register(spark)
     val r = spark.sql(
       """SELECT simhash64(split('the quick brown fox', ' ')) AS h,
         |  size(winnow_fingerprint('the quick brown fox jumps over the dog')) AS n,
@@ -18,7 +17,6 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("media_byte_features callable from SQL") {
-    GraftExtensions.register(spark)
     val r = spark.sql(
       "SELECT media_byte_features(encode('aaaa', 'UTF-8')) AS f").head
     val f = r.getStruct(0)
@@ -28,7 +26,6 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("dot_product and cosine_sim callable from SQL") {
-    GraftExtensions.register(spark)
     val r = spark.sql(
       """SELECT dot_product(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d,
         |  cosine_sim(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS c,
@@ -42,7 +39,6 @@ class GraftExtensionsSpec extends SparkSpec {
   test("cdc_cuts and gram_run_stats callable from SQL") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    GraftExtensions.register(spark)
     val text = "the quick brown fox jumps over the lazy dog again and again"
     val df = Seq(text).toDF("t")
     val viaSql = df.selectExpr(
@@ -59,7 +55,6 @@ class GraftExtensionsSpec extends SparkSpec {
   test("SQL result equals the DataFrame API result") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    GraftExtensions.register(spark)
     val df = Seq("a b c d e f g h").toDF("t")
     val viaSql = df.selectExpr("simhash64(split(t, ' ')) AS h").head.getLong(0)
     val viaApi = df.select(

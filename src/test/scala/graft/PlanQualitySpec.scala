@@ -1,7 +1,11 @@
 package graft
 
+import graft.queries.TextQueries
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.execution.{ExplainMode, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
 
 /** Physical-plan assertions: the plans we ship are the plans we designed —
   * filters reach the parquet scan, scans are column-pruned, small dims
@@ -234,6 +238,65 @@ class PlanQualitySpec extends SparkSpec {
     assert(p.contains("BroadcastHashJoin"), p)
     assert(!p.contains("SortMergeJoin"), p)
     assert(!p.contains("CartesianProduct"), p)
+  }
+
+  private object Walk extends AdaptiveSparkPlanHelper
+
+  /** Copies of a kernel in a physical plan, subqueries included. */
+  private def kernelCount(plan: SparkPlan)(kernel: PartialFunction[Expression, Unit]): Int =
+    Walk.collectWithSubqueries(plan) { case p =>
+      p.expressions.map(_.collect(kernel).size).sum
+    }.sum
+
+  private def kernelCount(df: DataFrame)(kernel: PartialFunction[Expression, Unit]): Int =
+    kernelCount(df.queryExecution.executedPlan)(kernel)
+
+  private def fullLineage[T](body: => T): T = {
+    spark.conf.set("spark.graft.materialize.skip", "true")
+    try body finally spark.conf.unset("spark.graft.materialize.skip")
+  }
+
+  private val gramRunStats: PartialFunction[Expression, Unit] =
+    { case _: graft.functions.GramRunStats => }
+  private val winnow: PartialFunction[Expression, Unit] =
+    { case _: graft.functions.WinnowFingerprint => }
+  // the q19 quality chain's punctuation count (TextOps.punctCount), which
+  // the optimizer rewrites to size(regexp_extract_all(..., pattern, 0))
+  private val qualityChain: PartialFunction[Expression, Unit] = {
+    case e if e.prettyName == "regexp_extract_all" &&
+      e.children(1) == Literal("[^a-z0-9\\s]") =>
+  }
+
+  // Stage-barrier adopters: copies of each heavy kernel in the full-lineage
+  // executed plan. A barrier that stops holding lets a filter re-derive the
+  // kernel below the staging projection, which raises the count.
+  test("q75: the Gopher verdict reads staged gram stats, above the fan-out exchange") {
+    for (q <- Seq("q75_gopher_apply", "q75b_gopher_apply_relaxed")) {
+      val plan = fullLineage(SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan)
+      // 21 copies with the verdict substituted into one Filter; the staged
+      // projection holds one per gram size (9)
+      assert(kernelCount(plan)(gramRunStats) <= 21, q)
+      // unbarred, the verdict sinks through the fan-out into the scan stage
+      val belowExchange = Walk.collectWithSubqueries(plan) {
+        case e: Exchange => kernelCount(e.child)(gramRunStats)
+      }.sum
+      assert(belowExchange === 0, s"$q\n$plan")
+    }
+  }
+
+  test("q65/q67: the winnow kernel runs once per lineage copy of the posting table") {
+    // three copies: the posting table feeds the pair counts and both
+    // n_rare joins (materialize checkpoints it once outside this sweep)
+    assert(fullLineage(kernelCount(
+      SparkEntry.queries("q65_winnow_overlap")(spark, sf))(winnow)) === 3)
+    // q67's CC runs at construction; its pair frame is the kernel's plan
+    assert(fullLineage(kernelCount(TextQueries.winnowPairsOf(
+      Tables.documents(spark, sf)))(winnow)) === 3)
+  }
+
+  test("q61/q78: the quality gate and the sample threshold score each doc once") {
+    for (q <- Seq("q61_training_export", "q78_quality_sample"))
+      assert(fullLineage(kernelCount(SparkEntry.queries(q)(spark, sf))(qualityChain)) === 1, q)
   }
 
   test("trades clean+agg: single shuffle for the 4-key aggregate") {

@@ -62,7 +62,7 @@ class QueriesSmokeSpec extends SparkSpec {
       "q87_token_budget" -> Set("Exchange SinglePartition"),
       // merged Misra–Gries sketch (one row) + the n_total window over the
       // ≤k+1-row marked-count aggregate (bounded by construction)
-      "q88_heavy_hitters" -> Set("Exchange SinglePartition", "BroadcastNestedLoopJoin"),
+      "q88_heavy_hitters" -> Set("Exchange SinglePartition"),
       // q89 has no entry: its 256-row weight-table build (which carries a
       // SinglePartition totals aggregate) runs at query CONSTRUCTION — the
       // registered plan is the narrow frozen-weights scoring projection

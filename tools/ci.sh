@@ -15,8 +15,23 @@ cd "$(dirname "$0")/.."
 python3 tools/test_check_bench.py
 python3 tools/test_check_oracle.py
 
-OUT="${1:-$(mktemp -d /tmp/graft-ci.XXXXXX)}"
 CSV='/root/reference/trades (1) (2) (1).csv'
+GOLDEN_DB=/root/reference/agg_result.db
+GOLDEN_XLSX=/root/reference/output/top_clients.xlsx
+
+# -- Inputs: the reference's CSV and goldens. Without them the ETL run and
+# -- all three artifact checks are impossible; name what is missing and fail.
+missing=()
+for f in "$CSV" "$GOLDEN_DB" "$GOLDEN_XLSX"; do
+  [ -e "$f" ] || missing+=("'$f'")
+done
+if [ "${#missing[@]}" -gt 0 ]; then
+  echo "[ci] FAIL: missing input ${missing[*]}; could not run the sqlite," \
+    "xlsx and charts artifact checks" >&2
+  exit 1
+fi
+
+OUT="${1:-$(mktemp -d /tmp/graft-ci.XXXXXX)}"
 echo "[ci] output dir: $OUT"
 
 # -- Run ETL (the workflow's `python etl_weekly_trades.py` step) ------------
@@ -24,11 +39,11 @@ sbt -batch "runMain graft.etl.RunEtl \"$CSV\" $OUT --sqlite --xlsx --charts"
 
 # -- Artifact 1: the SQLite aggregate vs the reference's checked-in DB ------
 # stock-sqlite3 integrity check, byte-identical DDL, row-by-row equality
-python3 tools/check_sqlite.py "$OUT/agg_result.db" /root/reference/agg_result.db
+python3 tools/check_sqlite.py "$OUT/agg_result.db" "$GOLDEN_DB"
 
 # -- Artifact 2+3: the xlsx report vs the reference's checked-in one, and --
 # -- both chart PNGs (decodable, reference dimensions) -----------------------
-python3 - "$OUT" <<'EOF'
+python3 - "$OUT" "$GOLDEN_XLSX" <<'EOF'
 import sys, zipfile, struct
 import xml.etree.ElementTree as ET
 
@@ -66,7 +81,7 @@ def norm(v):
         return v
 
 got = {r: norm(v) for r, v in cells(f"{out}/top_clients.xlsx")}
-want = {r: norm(v) for r, v in cells("/root/reference/output/top_clients.xlsx")}
+want = {r: norm(v) for r, v in cells(sys.argv[2])}
 if got != want:
     diff = {k: (want.get(k), got.get(k))
             for k in set(got) | set(want) if got.get(k) != want.get(k)}
