@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Load-immune cost profile: jobs / stages / tasks / executor-CPU per
   * registered query (construction + one noop-sink execution). Wall time on
@@ -9,6 +10,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   * changes (fewer actions, fewer stages, less total work).
   *
   * Usage: runMain graft.JobCount [sfDir] [q1,q2,...|all]
+  *
+  * One `JOBCOUNT <key>` line per key, then one `JOBCOUNT total` line
+  * summing jobs, stages, tasks, executor CPU and wall over the keys.
   */
 object JobCount {
   def main(args: Array[String]): Unit = {
@@ -38,20 +42,24 @@ object JobCount {
     }
     spark.sparkContext.addSparkListener(listener)
 
+    var (totJobs, totStages, totTasks, totCpuNs, totWall) = (0, 0, 0, 0L, 0.0)
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       // warm (codegen/JIT), untimed and uncounted
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       BenchSupport.clearState(spark)
-      Thread.sleep(150) // let the listener bus drain (private API otherwise)
+      Bridge.drainListeners(spark)
       jobs = 0; stages = 0; tasks = 0; cpuNs = 0L; runNs = 0L
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
       BenchSupport.clearState(spark)
-      Thread.sleep(150) // let the listener bus drain (private API otherwise)
+      Bridge.drainListeners(spark)
       println(f"JOBCOUNT $name%-28s jobs=$jobs%3d stages=$stages%3d tasks=$tasks%5d cpu=${cpuNs / 1e9}%7.2f run=${runNs / 1e9}%7.2f wall=$wall%6.2f")
+      totJobs += jobs; totStages += stages; totTasks += tasks
+      totCpuNs += cpuNs; totWall += wall
     }
+    println(f"JOBCOUNT total jobs=$totJobs stages=$totStages tasks=$totTasks cpu=${totCpuNs / 1e9}%.2f wall=$totWall%.2f")
     spark.stop()
   }
 }

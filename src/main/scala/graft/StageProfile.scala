@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Job trace and per-stage breakdown for ONE registered query: wall time
   * and the share spent building the DataFrame; per job its start offset,
@@ -48,16 +49,16 @@ object StageProfile {
 
     fn(spark, sfDir).write.format("noop").mode("overwrite").save() // warm
     BenchSupport.clearState(spark)
-    Thread.sleep(200)
+    Bridge.drainListeners(spark)
     record = true
     val w0 = System.currentTimeMillis()
     val df = fn(spark, sfDir)
     val tBuilt = System.currentTimeMillis()
     df.write.format("noop").mode("overwrite").save()
     val w1 = System.currentTimeMillis()
+    Bridge.drainListeners(spark)
     record = false
     BenchSupport.clearState(spark)
-    Thread.sleep(300) // let the listener bus drain
     println(f"STAGEPROFILE $name wall=${(w1 - w0) / 1e3}%.2f construct=${(tBuilt - w0) / 1e3}%.2f")
     var prevEnd = w0
     jobs.values.toSeq.sortBy(_.t0).foreach { j =>

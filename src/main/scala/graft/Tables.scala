@@ -2,15 +2,26 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Loaders for the driver test corpus (`TESTDATA.md`): one parquet per
-  * table under an sf directory. All queries in [[SparkEntry]] read through
-  * here so filter/column pushdown is uniform (plain parquet scans — Catalyst
-  * handles `PushedFilters` / `ReadSchema` pruning).
+  * table under an sf directory, `$sfDir/$name.parquet`, either one file or
+  * a Spark-written directory of part files (`graft.ScaleProbe`'s replicas).
+  * All queries in [[SparkEntry]] read through here so filter/column
+  * pushdown is uniform (plain parquet scans — Catalyst handles
+  * `PushedFilters` / `ReadSchema` pruning).
+  *
+  * `load` reads the table's schema from one parquet footer on the driver
+  * and hands it to the reader, so a load schedules no Spark job (plain
+  * `spark.read.parquet` infers the schema with a one-task job per load).
+  * The schema is the one Spark would infer; each load reads its footer
+  * again, nothing is cached.
   */
 object Tables {
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(Bridge.parquetSchema(spark, path)).parquet(path)
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")

@@ -46,9 +46,10 @@ object Verify {
     val selected = selectQueries(only, m => System.err.println(m))
     selected.foreach { case (name, fn) =>
       // construction INSIDE the try: queries do eager work at build time
-      // (Tables.load analysis, materialize()'s localCheckpoint job,
-      // argument require()s) — outside it, one failing query would abort
-      // the whole dump INCLUDING oracle_sql.json and zero the round
+      // (materialize()'s localCheckpoint job, argument require()s; a
+      // Tables.load only reads a footer, but a missing table fails there)
+      // — outside it, one failing query would abort the whole dump
+      // INCLUDING oracle_sql.json and zero the round
       try {
         val df = fn(spark, sfDir)
         (if (singleFile) df.repartition(1) else df).write.mode("overwrite")

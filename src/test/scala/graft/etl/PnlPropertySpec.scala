@@ -75,4 +75,31 @@ class PnlPropertySpec extends SparkSpec {
       .groupBy(_._1).map { case (s, rows) => s -> rows.maxBy(_._2.getTime)._3 }
     assert(marks === expected)
   }
+
+  test("a tie on a symbol's latest timestamp marks at one of the tied prices, and PnL follows that mark") {
+    import spark.implicits._
+    // max_by over tied timestamps is indeterminate (Transform.apply's tie
+    // note): this pins what holds whichever tied trade wins.
+    val latest = Timestamp.valueOf("2023-01-05 10:00:00")
+    val trades = Seq(
+      (Timestamp.valueOf("2023-01-02 09:00:00"), 1001L, "gold", "AAPL", "buy", 10.0, 90.0),
+      (Timestamp.valueOf("2023-01-03 09:00:00"), 1002L, "gold", "AAPL", "buy", 4.0, 95.0),
+      (latest, 1001L, "gold", "AAPL", "sell", 3.0, 101.0),
+      (latest, 1001L, "gold", "AAPL", "buy", 2.0, 105.0),
+    ).toDF("timestamp", "user_id", "client_type", "symbol", "side", "quantity", "price")
+    for (parts <- Seq(1, 2, 4)) {
+      val out = Transform(trades.repartition(parts), computePnl = true).collect()
+      val marks = out.map(_.getAs[Double]("mark_price")).toSet
+      assert(marks.size === 1)
+      val m = marks.head
+      assert(Set(101.0, 105.0).contains(m), s"mark $m with $parts partitions")
+      // user 1001: avg buy (900 + 210) / 12 = 92.5, realized 303 - 92.5 * 3,
+      // net 9; user 1002: avg 95, nothing sold, net 4
+      val expected = Map(1001L -> (25.5 + (m - 92.5) * 9), 1002L -> ((m - 95.0) * 4))
+      assert(out.length === 2)
+      out.foreach { r =>
+        assert(math.abs(r.getAs[Double]("total_pnl") - expected(r.getAs[Long]("user_id"))) < 1e-9)
+      }
+    }
+  }
 }
